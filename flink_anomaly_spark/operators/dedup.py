@@ -40,6 +40,10 @@ from flink_anomaly_spark.partitioning import spread
 #: managed.
 _PERSISTED: list[DataFrame] = []
 
+#: Set when ``_truncate_fn`` checkpoints a frame; :func:`release_cached`
+#: garbage-collects only then, and clears it.
+_CHECKPOINTED = False
+
 
 def _persist(df: DataFrame) -> DataFrame:
     df.persist()
@@ -54,18 +58,21 @@ def release_cached() -> int:
     a consumer that re-scans a released plan recomputes it (correctness
     is unaffected, only the branch-sharing speedup).
 
-    Also runs a Python ``gc.collect()``: ``localCheckpoint`` blocks (the
-    CC/pagerank/kcore lineage truncation) are only dropped by Spark's
-    ContextCleaner once the DRIVER-side RDD reference is garbage-
-    collected, and CPython's cyclic collector lags the query loop — a
-    many-query session accumulated 10-20 live checkpoint RDD block sets
-    and the checkpoint-heavy queries degraded 15-60 % vs a fresh
-    session. With the explicit collect the stored-RDD count stays at
-    the per-query working set (5-10) and in-loop times match fresh-
-    session probes (measured r13, OPTIMIZATION_r13.md; collect cost is
-    ~10 ms, outside every timed region)."""
+    After a lineage checkpoint (``_truncate_fn``: the CC/pagerank/kcore
+    loops) it also runs a Python ``gc.collect()``: checkpoint blocks
+    are only dropped by Spark's ContextCleaner once the DRIVER-side RDD
+    reference is garbage-collected, and CPython's cyclic collector lags
+    the query loop — a many-query session accumulated 10-20 live
+    checkpoint RDD block sets and the checkpoint-heavy queries degraded
+    15-60 % vs a fresh session. With the explicit collect the stored-
+    RDD count stays at the per-query working set (5-10) and in-loop
+    times match fresh-session probes (OPTIMIZATION_r13.md). The collect
+    costs ~60 ms with ~113k tracked objects, inside a caller's per-query
+    time, so it is skipped when nothing was checkpointed since the last
+    call."""
     import gc
 
+    global _CHECKPOINTED
     n = 0
     while _PERSISTED:
         df = _PERSISTED.pop()
@@ -74,7 +81,9 @@ def release_cached() -> int:
             n += 1
         except Exception:
             pass  # session already stopped — nothing to release
-    gc.collect()
+    if _CHECKPOINTED:
+        _CHECKPOINTED = False
+        gc.collect()
     return n
 
 # 61-bit Mersenne prime — all (a*h+b) % P arithmetic stays in int64
@@ -460,12 +469,12 @@ def _truncate_fn(df_session_src: DataFrame, reliable_checkpoint_dir: str | None)
         sc = df_session_src.sparkSession.sparkContext
         sc.setCheckpointDir(reliable_checkpoint_dir)
 
-        def _truncate(df: DataFrame) -> DataFrame:
+    def _truncate(df: DataFrame) -> DataFrame:
+        global _CHECKPOINTED
+        _CHECKPOINTED = True
+        if reliable_checkpoint_dir is not None:
             return df.checkpoint(eager=True)
-    else:
-
-        def _truncate(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
+        return df.localCheckpoint(eager=True)
 
     return _truncate
 

@@ -11,6 +11,8 @@
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -71,15 +73,18 @@ def inline_int_array(vals: list[int]) -> Column:
     BIGINT otherwise; every caller keeps values far inside int32 or
     casts explicitly, so the element type matches the unrolled form.
 
-    Non-integer values are rejected loudly (mirroring _sql_double's
-    non-finite guard): ``str(int(v))`` would silently truncate a float
-    where the ``F.lit`` form this replaces preserved it (r12 ADVICE).
+    Non-integer and non-finite values are rejected loudly (mirroring
+    _sql_double's non-finite guard): ``str(int(v))`` would silently
+    truncate a float where the ``F.lit`` form this replaces preserved
+    it (r12 ADVICE).
     Empty input rejected for the sequence reason (see inline_vector)."""
     if not vals:
         raise ValueError("inline_int_array: empty literal list")
     parts = []
     for v in vals:
-        if v != int(v):
+        # ±inf/NaN would raise OverflowError/ValueError from int() itself;
+        # ints skip isfinite, which overflows on ints beyond float range
+        if not (isinstance(v, int) or math.isfinite(v)) or v != int(v):
             raise ValueError(f"inline_int_array: non-integer literal {v!r}")
         parts.append(str(int(v)))
     return F.expr("array(" + ",".join(parts) + ")")

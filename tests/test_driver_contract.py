@@ -376,3 +376,29 @@ def test_round_parse_survives_round_10(tmp_path):
     # red rows never advance the baseline; cutoff hides future rounds
     assert last_green_map(str(tmp_path), 11) == {"q": 10}
     assert last_green_map(str(tmp_path), 1000) == {"q": 100}
+
+
+def test_fingerprints_ignore_query_runtime_state(spark):
+    """Running queries fills the parquet schema cache in ``tables`` and
+    sets the lineage-checkpoint marker in ``operators.dedup``. Neither
+    shapes a plan, so neither may change a fingerprint, or the ledger
+    would depend on which queries ran earlier in the process."""
+    from flink_anomaly_spark import tables
+    from flink_anomaly_spark.operators import dedup
+    from flink_anomaly_spark.plans.registry import all_queries
+    from tests.conftest import SF_SMOKE
+    from tools.plan_fingerprints import query_fingerprint
+
+    names = ["tpch_q1_pricing", "pagerank_neardup"]
+    dedup.release_cached()
+    tables._SCHEMA_CACHE.clear()
+    before = {n: query_fingerprint(n) for n in names}
+    queries = all_queries()
+    try:
+        for n in names:
+            queries[n](spark, SF_SMOKE).count()
+        # the state really moved between the two fingerprints
+        assert tables._SCHEMA_CACHE and dedup._CHECKPOINTED
+        assert {n: query_fingerprint(n) for n in names} == before
+    finally:
+        dedup.release_cached()

@@ -190,3 +190,41 @@ def test_release_cached_unpersists_dedup_intermediates(spark):
     assert release_cached() >= 1
     # idempotent: second call has nothing left to release
     assert release_cached() == 0
+
+
+def test_release_cached_collects_only_after_a_checkpoint(spark, monkeypatch):
+    """``release_cached`` frees localCheckpoint blocks by running
+    ``gc.collect()`` (Spark drops them only once the driver-side RDD is
+    collected). The collect costs tens of ms per call, so it must run
+    after a query that truncated lineage and be skipped after one that
+    did not."""
+    import gc
+
+    from flink_anomaly_spark.operators.dedup import release_cached
+    from flink_anomaly_spark.plans.registry import all_queries
+    from tests.conftest import SF_SMOKE
+
+    queries = all_queries()
+    release_cached()  # start from a clean checkpoint marker
+    calls = []
+    monkeypatch.setattr(gc, "collect", lambda *a: calls.append(a) or 0)
+
+    queries["pagerank_neardup"](spark, SF_SMOKE).count()
+    release_cached()
+    assert len(calls) == 1
+    release_cached()  # the marker is cleared by the collect
+    assert len(calls) == 1
+
+    queries["tpch_q1_pricing"](spark, SF_SMOKE).count()
+    release_cached()
+    assert len(calls) == 1
+
+
+@pytest.mark.parametrize("bad", [float("inf"), float("-inf"), float("nan")])
+def test_inline_int_array_rejects_non_finite(bad):
+    """±inf used to escape as OverflowError from int(); every
+    non-finite literal gets the non-integer ValueError instead."""
+    from flink_anomaly_spark.operators.similarity import inline_int_array
+
+    with pytest.raises(ValueError, match="non-integer literal"):
+        inline_int_array([1, bad])

@@ -4,7 +4,10 @@ already covered by the round-trip tests."""
 from __future__ import annotations
 
 import os
+import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -409,3 +412,66 @@ def test_compact_table_executes_and_is_reversible(spark, tmp_path):
     assert len(list_table_versions(final)) == 2
     rollback_table(final, 1)
     assert spark.read.parquet(final).count() == 2000
+
+
+def _jobs_launched(spark, group, fn):
+    """Run ``fn`` under a job group; return its result and the number
+    of Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_reuses_inferred_schema(spark, tmp_path):
+    """Schema inference is a Spark job per bare parquet read; the second
+    load of an unchanged file must reuse the first one's schema."""
+    shutil.copy(os.path.join(SF_SMOKE, "region.parquet"), tmp_path / "region.parquet")
+    first, jobs = _jobs_launched(
+        spark, f"infer-{tmp_path.name}", lambda: load_table(spark, str(tmp_path), "region")
+    )
+    assert jobs >= 1  # the first read infers
+    again, jobs = _jobs_launched(
+        spark, f"reuse-{tmp_path.name}", lambda: load_table(spark, str(tmp_path), "region")
+    )
+    assert jobs == 0
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_load_table_sees_file_replaced_in_place(spark, tmp_path):
+    """A file rewritten at the same path with a different schema is a
+    new file version: it must be read with the new schema, not the
+    cached one."""
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["a", "b"]}), path)
+    assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
+    pq.write_table(pa.table({"r_regionkey": [7], "r_comment": ["c"], "w": [0.5]}), path)
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_comment", "w"]
+    assert [tuple(r) for r in df.collect()] == [(7, "c", 0.5)]
+
+
+def test_load_table_cached_events_keep_micros(spark, tmp_path):
+    """``events`` stored as TIMESTAMP(NANOS) reads as int64 nanos and is
+    truncated to µs; a read through the cached schema must apply the
+    same conversion."""
+    events = pq.read_table(os.path.join(SF_SMOKE, "events.parquet"))
+    ts = events.column("ts").cast(pa.timestamp("ns"))
+    events = events.set_column(events.schema.get_field_index("ts"), "ts", ts)
+    pq.write_table(events, str(tmp_path / "events.parquet"), version="2.6")
+    want = sorted(v // 1000 for v in ts.cast(pa.int64()).to_pylist())
+
+    def micros():
+        df = load_table(spark, str(tmp_path), "events")
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        return sorted(r.us for r in df.select(F.unix_micros("ts").alias("us")).collect())
+
+    assert micros() == want
+    got, jobs = _jobs_launched(spark, f"events-{tmp_path.name}", micros)
+    assert got == want
+    assert jobs == 1  # the collect only: no inference job

@@ -74,6 +74,10 @@ def _is_package_obj(obj) -> bool:
 #: excluded.
 RUNTIME_STATE_NAMES = {
     ("flink_anomaly_spark.operators.dedup", "_PERSISTED"),
+    # set by every lineage checkpoint, cleared by release_cached
+    ("flink_anomaly_spark.operators.dedup", "_CHECKPOINTED"),
+    # gains an inferred schema on the first read of each parquet file
+    ("flink_anomaly_spark.tables", "_SCHEMA_CACHE"),
     ("flink_anomaly_spark.streaming.pipelines", "LAST_STATE_METRICS"),
     # set to the source file size as each streaming source is built —
     # hashing it would make fingerprints depend on which query ran last
